@@ -1,13 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    // single-sourced session config (r15 advice #3): Bench, BenchOne
-    // and PlanDump share one builder so dumped plans ARE benched plans
-    val spark = BenchEnv.benchSessionBuilder(cpus).getOrCreate()
+    val spark = BenchEnv.session(BenchEnv.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // t4's INTENTIONALLY poisoned micro-batch logs a full stack trace
     // through the (async) streaming thread — at ERROR level, so ERROR
@@ -20,7 +16,7 @@ object Bench {
     // job"), each with a full stack trace — r5 measured those four, not
     // the streaming subtree, as the remaining tail noise. A real query
     // failure still reaches the artifact as its -1 entry plus the
-    // "[bench] query failed" stderr line from `once`, so benching loses
+    // "[bench] <key> failed" stderr line from `once`, so benching loses
     // no signal by silencing them here.
     Seq("org.apache.spark.sql.execution.streaming",
         "org.apache.spark.sql.streaming",
@@ -41,7 +37,7 @@ object Bench {
       "org.apache.spark.rdd.ShuffledRDD", org.apache.logging.log4j.Level.ERROR)
     // Untimed warmup: JIT + whole-stage-codegen compilation and parquet
     // footer reads otherwise land entirely on the first measured query.
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
+    try SparkEntry.entry(spark).count() catch { case NonFatal(_) => () }
     // Streaming-machinery warmup (r8 verdict #7): the first streaming
     // query in a fresh JVM pays 4-10× steady state (state-store
     // provider init, microbatch thread pools, streaming-specific
@@ -50,30 +46,15 @@ object Bench {
     // boot. Swallow failures: warmup must never fail the bench.
     try SparkEntry.queries.get("streaming_event_counts")
       .foreach(_(spark, sfDir).count())
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
     // Two passes, min per query: reports steady-state latency (first
     // pass pays per-query codegen compilation + JIT, which is noise at
-    // this scale and absent in any long-running deployment).
-    // a failed query reports -1, never a bogus fast timing
-    // NonFatal only (r11 advice): an OutOfMemoryError/LinkageError means
-    // the JVM may be corrupted — every timing after it is suspect, so
-    // fatal errors abort the run instead of degrading to a -1 sentinel.
-    // Per-query pin hygiene (r16, VERDICT r15 #3): each query closure
-    // lazily checkpoints its multi-consumer frames; those blocks are
-    // dead the moment the action returns (every pass rebuilds its
-    // own), but un-freed they accumulate — ~40 orphaned checkpoint
-    // RDDs per pass across a 401-query session. releaseQueryPins
-    // frees exactly the non-memo pins a query created, AFTER the
-    // timing is captured — the timed region is unchanged.
+    // this scale and absent in any long-running deployment). Timing,
+    // failure policy and pin release are BenchEnv.run's.
     var freedPins = 0L
-    def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val pinsBefore = graft.api.Graft.pinSnapshot(spark)
-      val t0 = System.nanoTime()
-      val dt =
-        try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
-        catch { case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[bench] query failed: ${e.getMessage}"); -1.0 }
-      freedPins += graft.api.Graft.releaseQueryPins(spark, pinsBefore)
+    def once(key: String)(action: => Unit): Double = {
+      val (dt, freed) = BenchEnv.run(spark, "bench", key)(action)
+      freedPins += freed
       dt
     }
     // Noop-sink mode (r16, VERDICT r15 #1; guide §1.4): count() lets
@@ -88,19 +69,6 @@ object Bench {
     // count()-keys sum so even a local noop run's `value` is
     // comparable round-over-round.
     val noopMode = sys.env.get("SPARK_GRAFT_NOOP").exists(v => v == "1" || v == "true")
-    def onceNoop(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val pinsBefore = graft.api.Graft.pinSnapshot(spark)
-      val t0 = System.nanoTime()
-      val dt =
-        try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        catch { case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[bench] noop pass failed: ${e.getMessage}"); -1.0 }
-      freedPins += graft.api.Graft.releaseQueryPins(spark, pinsBefore)
-      dt
-    }
     // Host-drift probe (r9 seed #3): this host degrades late-session
     // (identical code measured 141.78 → 177.26 s twenty minutes apart,
     // BENCH_NOTES §r9), which poisons ROUND-over-round comparisons
@@ -112,19 +80,13 @@ object Bench {
     // can't fake a drift reading.
     // Guarded like once(): a probe failure (or a renamed probe key)
     // must degrade to a -1 sentinel, never abort the whole bench run.
-    def probeMin(): Double = SparkEntry.queries.get("a1_count_by_year") match {
+    val probeKey = "a1_count_by_year"
+    def probeMin(): Double = SparkEntry.queries.get(probeKey) match {
       case None =>
-        System.err.println("[bench] probe query missing: a1_count_by_year")
+        System.err.println(s"[bench] probe query missing: $probeKey")
         -1.0
       case Some(fn) =>
-        def p(): Double =
-          try {
-            val t0 = System.nanoTime(); fn(spark, sfDir).count()
-            (System.nanoTime() - t0) / 1e9
-          } catch { case scala.util.control.NonFatal(e) =>
-            System.err.println(s"[bench] probe failed: ${e.getMessage}"); -1.0
-          }
-        val runs = Seq(p(), p(), p())
+        val runs = Seq.fill(3)(once(probeKey)(fn(spark, sfDir).count(): Unit))
         if (runs.exists(_ < 0)) -1.0 else runs.min
     }
     val sortedQ = SparkEntry.queries.toSeq.sortBy(_._1)
@@ -133,8 +95,13 @@ object Bench {
     var probeMid = -1.0
     sortedQ.zipWithIndex.foreach { case ((name, fn), i) =>
       if (i == sortedQ.size / 2) probeMid = probeMin()
-      passes(name) = (once(fn), once(fn))
-      if (noopMode) passes(name + "@noop") = (onceNoop(fn), onceNoop(fn))
+      def count(): Double = once(name)(fn(spark, sfDir).count(): Unit)
+      passes(name) = (count(), count())
+      if (noopMode) {
+        def noop(): Double = once(name + "@noop")(
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save())
+        passes(name + "@noop") = (noop(), noop())
+      }
     }
     val probePost = probeMin()
     val results = passes.toSeq.map { case (name, (a, b)) =>
@@ -202,7 +169,7 @@ object Bench {
     // Stop Spark BEFORE printing: nothing (executor shutdown chatter,
     // lingering streaming threads) can print after the JSON line, so it
     // is the final stdout line the driver sees.
-    try spark.stop() catch { case _: Throwable => () }
+    try spark.stop() catch { case NonFatal(_) => () }
     println(line)
   }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Single-query timing harness for plan iteration: runs one registered
   * query N times (default 3) on a fresh session and prints each pass —
@@ -13,22 +12,15 @@ object BenchOne {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val passes = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    // single-sourced session config (r15 advice #3)
-    val spark = BenchEnv.benchSessionBuilder(cpus).getOrCreate()
+    val spark = BenchEnv.session(BenchEnv.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val fn = SparkEntry.queries(name)
     if (sys.env.contains("SPARK_GRAFT_EXPLAIN"))
       fn(spark, sfDir).explain("formatted")
     (1 to passes).foreach { i =>
-      val pinsBefore = graft.api.Graft.pinSnapshot(spark)
-      val t0 = System.nanoTime()
-      val n = fn(spark, sfDir).count()
-      println(f"[bench-one] $name pass $i: ${(System.nanoTime() - t0) / 1e9}%.3f s ($n rows)")
-      // same per-query pin hygiene as Bench (r16): free this pass's
-      // lazy checkpoints (memos exempt) outside the timed region
-      graft.api.Graft.releaseQueryPins(spark, pinsBefore): Unit
+      var n = 0L
+      val (dt, _) = BenchEnv.run(spark, "bench-one", name) { n = fn(spark, sfDir).count() }
+      if (dt >= 0) println(f"[bench-one] $name pass $i: $dt%.3f s ($n rows)")
     }
     spark.stop()
   }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool (optimization rounds): dump `.explain("formatted")` for a
   * list of registered queries to files, under the SAME session config
@@ -12,11 +11,8 @@ object PlanDump {
     require(args.length >= 3, "usage: PlanDump <outDir> <suffix> <keys> [sfDir]")
     val (outDir, suffix, keys) = (args(0), args(1), args(2).split(",").toSeq)
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    // single-sourced session config (r15 advice #3): the dumped plans
-    // are the benched plans BY CONSTRUCTION, not by copy-paste
-    val spark = BenchEnv.benchSessionBuilder(cpus).getOrCreate()
+    // the dumped plans are the benched plans BY CONSTRUCTION
+    val spark = BenchEnv.session(BenchEnv.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(outDir).mkdirs()
     keys.foreach { k =>

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Plan-shape regression ledger: for every registered query, count the
   * structural operators in its physical plan (exchanges, broadcasts,
@@ -21,39 +20,22 @@ object PlanLedger {
   def main(args: Array[String]): Unit = {
     val out = if (args.nonEmpty) args(0) else "target/plan_ledger.json"
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // ledger the plans as Verify executes them (tail-sort rewrite on)
-      .config("spark.graft.tailSortSinglePartition", "true")
-      .getOrCreate()
+    val spark = BenchEnv.session(BenchEnv.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val rows = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val entry =
-        try {
-          // recordTouchedMemos attributes the plan's `Scan ExistingRDD`
-          // leaves (localCheckpointed shared exchanges) to their memo
-          // labels — the r10 judge's blind spot: such queries showed
-          // scans:0 with no marker. The memos' OWN scan health is
-          // fingerprinted at build time (memo:<label> rows below).
-          val (df, memos) = graft.api.Graft.recordTouchedMemos(fn(spark, dir))
-          val extra =
-            if (memos.isEmpty) Nil
-            else Seq("via_memo" ->
-              memos.mkString("\"", ",", "\""))
-          PlanStats.countsJson(df, extra)
-        } catch {
-          case e: Throwable =>
-            System.err.println(s"[ledger] $name failed: ${e.getMessage}")
-            """{"error":1}"""
-        }
+      var entry = """{"error":1}"""
+      BenchEnv.run(spark, "ledger", name) {
+        // recordTouchedMemos attributes the plan's `Scan ExistingRDD`
+        // leaves (localCheckpointed shared exchanges) to their memo
+        // labels — the r10 judge's blind spot: such queries showed
+        // scans:0 with no marker. The memos' OWN scan health is
+        // fingerprinted at build time (memo:<label> rows below).
+        val (df, memos) = graft.api.Graft.recordTouchedMemos(fn(spark, dir))
+        val extra =
+          if (memos.isEmpty) Nil
+          else Seq("via_memo" -> memos.mkString("\"", ",", "\""))
+        entry = PlanStats.countsJson(df, extra)
+      }: Unit
       s""""$name":$entry"""
     }
     // one row per memoized exchange BUILT during the walk above: its

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Scaling-exponent harness: times registered queries across the three
   * test SFs (sf0.001 / sf0.01 / sf0.1, 100× input growth end to end)
@@ -25,33 +25,19 @@ object ScaleCurve {
   def main(args: Array[String]): Unit = {
     val keys = if (args.nonEmpty) args.toSeq else defaultKeys
     val sfs = Seq("sf0.001", "sf0.01", "sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", BenchEnv.localDir)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.graft.tailSortSinglePartition", "true")
-      .getOrCreate()
+    val spark = BenchEnv.session(BenchEnv.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
+    try SparkEntry.entry(spark).count() catch { case NonFatal(_) => () }
     def time(key: String, dir: String): Double = {
       val fn = SparkEntry.queries(key)
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        fn(spark, dir).count()
-        (System.nanoTime() - t0) / 1e9
-      }
-      once(); math.min(once(), once()) // warm codegen, then min of 2
+      def once(): Double = BenchEnv.run(spark, "scale", key)(fn(spark, dir).count(): Unit)._1
+      val ts = Seq(once(), once(), once()) // warm codegen, then min of 2
+      if (ts.exists(_ < 0)) -1.0 else ts.tail.min
     }
     val rows = keys.map { k =>
       val ts = sfs.map(sf => time(k, s"/root/testdata/$sf"))
-      val expn = math.log10(ts(2) / ts(1)) // per 10× on the top decade
+      val expn = // per 10× on the top decade
+        if (ts.exists(_ < 0)) Double.NaN else math.log10(ts(2) / ts(1))
       println(f"[scale] $k%-28s ${ts(0)}%7.2f ${ts(1)}%7.2f ${ts(2)}%7.2f  exp=$expn%5.2f")
       (k, ts, expn)
     }

@@ -51,6 +51,11 @@ object SparkEntry {
       os: Map[String, String])
   private type OpModule = Module
 
+  /** Each module's query keys, in registration order: `queries` keeps
+    * only the last of two modules registering one key, so the registry
+    * contract spec checks these for overlaps. */
+  private[graft] def moduleKeys: Seq[Set[String]] = modules.map(_.qs.keySet)
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     modules.flatMap(_.qs).toMap

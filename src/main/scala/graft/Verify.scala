@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,39 +10,15 @@ object Verify {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     def keep(name: String) = only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // 74 queries generate >>100 codegen'd stages; the default 100-entry
-      // class cache evicts between the two timed passes and every query
-      // pays Janino recompilation twice (measured: ta_langid 1.4s -> 4s)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // tolerate TIMESTAMP(NANOS) events layouts
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // report-sized outputs: tail orderBy keeps its order but sheds the
-      // range exchange + bounds-sampling job (TailSortSinglePartition)
-      .config("spark.graft.tailSortSinglePartition", "true")
-      .getOrCreate()
+    val spark = BenchEnv.session(BenchEnv.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.foreach { case (name, fn) =>
-      if (keep(name)) {
-        // per-query pin hygiene (r16): free the query's own lazy
-        // checkpoints once its write returns — session memos are
-        // exempt — so a full 401-query dump doesn't accumulate
-        // hundreds of orphaned checkpoint RDDs in the block manager.
-        val pinsBefore = graft.api.Graft.pinSnapshot(spark)
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      if (keep(name))
+        BenchEnv.run(spark, "verify", name) {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
         }
-        graft.api.Graft.releaseQueryPins(spark, pinsBefore): Unit
-      }
     }
     // Capped-LSH fixture assumption (r9 advice): these queries cap hot
     // bands at 4096 (star degradation) while their DuckDB oracles

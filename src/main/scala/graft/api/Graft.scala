@@ -339,13 +339,6 @@ object Graft {
       .select(col("qid"), col("rank"), col("vec_id"), col("score"))
   }
 
-  /** L2-normalize an array column (adds unit-norm `outCol`). */
-  def l2Normalize(df: DataFrame, vecCol: String, outCol: String): DataFrame =
-    df.withColumn("__norm", VectorFns.l2Norm(VectorFns.asDouble(col(vecCol))))
-      .withColumn(outCol,
-        VectorFns.l2NormalizeBy(VectorFns.asDouble(col(vecCol)), col("__norm")))
-      .drop("__norm")
-
   // ---- events ------------------------------------------------------
 
   /** Gap-based sessionization. In: (keyCol, tsCol timestamp, ordCol).
@@ -1702,27 +1695,6 @@ object Graft {
     cum.groupBy(col("g"))
       .agg(max(col("total")).as("n_rows"), aggs: _*)
   }
-
-  /** 64-register HyperLogLog sketch rows (keyCol, r, m) — the
-    * approximate-distinct complement of [[quantileSketch]]'s additive
-    * histogram; mergeable by per-register max
-    * ([[mergeHllSketches]]). */
-  def hllSketch(df: DataFrame, keyCol: String, idCol: String): DataFrame =
-    graft.operators.StatSketchOps.hllRegisters(df, col(keyCol), col(idCol))
-      .withColumnRenamed("__k", keyCol)
-
-  /** Exact merge of two [[hllSketch]] results: union + per-register
-    * max (the law StatSketchOpsSpec asserts). */
-  def mergeHllSketches(a: DataFrame, b: DataFrame, keyCol: String): DataFrame =
-    a.unionByName(b).groupBy(col(keyCol), col("r")).agg(max(col("m")).as("m"))
-
-  /** Cardinality estimate per key from an [[hllSketch]], with the
-    * standard small-range linear-counting correction.
-    * Out: (keyCol, v_regs, hll_est). */
-  def hllCardinality(sketch: DataFrame, keyCol: String): DataFrame =
-    graft.operators.StatSketchOps.hllEstimate(
-        sketch.withColumnRenamed(keyCol, "__k"))
-      .withColumnRenamed("__k", keyCol)
 
   /** Gini–Simpson diversity of each key's category mix, exact
     * rationals + one final division. In: (keyCol, catCol). Out:

@@ -82,14 +82,10 @@ object RagPipeline {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
     val outDir = if (args.length > 1) args(1) else "target/rag_pipeline_out"
-    val spark = SparkSession.builder().master(
-        sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    // the engine's one session config; SPARK_MASTER deploys it elsewhere
+    val builder = graft.BenchEnv.session(graft.BenchEnv.cpus)
+    sys.env.get("SPARK_MASTER").foreach(builder.master)
+    val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try run(spark, sfDir, outDir) finally spark.stop()
   }

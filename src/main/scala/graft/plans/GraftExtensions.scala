@@ -114,8 +114,8 @@ object FoldConstantHigherOrderFunctions extends Rule[LogicalPlan] {
   * GATED by `spark.graft.tailSortSinglePartition` (default FALSE): a
   * single-partition sort is only the right plan when the final result is
   * report-sized. A library user global-sorting a 100 TB result must keep
-  * the parallel range sort, so the engine's entry points that only ever
-  * emit bounded report tables (Verify / Bench / PlanLedger / ScaleCurve)
+  * the parallel range sort, so only the sessions `graft.BenchEnv` builds
+  * for the harness mains, which only ever emit bounded report tables,
   * opt in, and nothing else changes behavior. Root-only on purpose: a
   * sort under a Limit plans as TakeOrderedAndProject (already cheap), a
   * sort under an Aggregate is removed by EliminateSorts, and interior

@@ -6,17 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local SparkSession for all suites (one JVM-wide session). */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // tolerate TIMESTAMP(NANOS) events layouts
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // tests run the same tail-sort rewrite the Verify gate runs
-      .config("spark.graft.tailSortSinglePartition", "true")
-      .getOrCreate()
+    // the harness mains' session config, so tests run the plans
+    // (tail-sort rewrite included) that Verify and Bench run
+    val s = BenchEnv.session("4").appName("graft-test").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
